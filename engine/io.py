@@ -10,9 +10,11 @@ Layer-A MapReduce runner (``engine.mapreduce``).
 from __future__ import annotations
 
 import os
+from collections.abc import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -127,13 +129,51 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}
+def local_frame(
+    spark: SparkSession, rows: Iterable, schema: str | StructType
+) -> DataFrame:
+    """A DataFrame over driver-held ``rows`` (tuples, lists, dicts or
+    ``Row``s) with the DDL or ``StructType`` ``schema``, planned as a
+    JVM ``LocalTableScan``.
 
+    ``spark.createDataFrame(<list>, schema)`` is not a local relation in
+    classic PySpark: it parallelizes the pickled rows and applies the
+    schema with ``applySchemaToPythonRDD``, so every job that scans the
+    frame starts Python workers — about 0.25 s per job on a 4-vCPU host,
+    however few the rows. A ``pyarrow.Table`` input ships the rows to
+    the JVM once and scans them there.
 
-def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Register every table as a temp view (for the SQL API) and return them."""
-    dfs = load_tables(spark, sf_dir)
-    for name, df in dfs.items():
-        df.createOrReplaceTempView(name)
-    return dfs
+    Values go through the schema's own verifier and ``toInternal``, the
+    exact steps of the list path, and the Arrow columns are built from
+    those internal values: dates as epoch days, timestamps as UTC epoch
+    microseconds. So a naive ``datetime`` is read in the process's
+    local time zone, as the list path reads it (a plain ``pa.array`` of
+    naive datetimes would read it as UTC)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import (
+        _create_converter,
+        _make_type_verifier,
+        _parse_datatype_string,
+    )
+
+    struct = (
+        schema if isinstance(schema, StructType)
+        else _parse_datatype_string(schema)
+    )
+    verify = _make_type_verifier(struct)
+    convert = _create_converter(struct)
+    internal = []
+    for row in rows:
+        verify(row)
+        internal.append(struct.toInternal(convert(row)))
+    arrow_schema = to_arrow_schema(struct)
+    columns = list(zip(*internal)) or [()] * len(struct.fields)
+    table = pa.Table.from_arrays(
+        [
+            pa.array(col, type=field.type)
+            for col, field in zip(columns, arrow_schema)
+        ],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, struct)

@@ -55,7 +55,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 from engine.functions.hashing import DUCK_H60, SPARK_H60
-from engine.io import load_table
+from engine.io import load_table, local_frame
 from engine.plans import record_iteration_plan
 from engine.registry import query
 
@@ -713,8 +713,8 @@ def _zf_footer_audit(
     replays the file ASSIGNMENT relationally; a hash match therefore
     proves the written files' footer rectangles equal the declared
     z-cells — the physical layout, not a simulation."""
-    fstats = spark.createDataFrame(
-        _zf_footer_stats(out),
+    fstats = local_frame(
+        spark, _zf_footer_stats(out),
         "split string, zf bigint, dlo bigint, dhi bigint,"
         " blo bigint, bhi bigint, n_rows bigint",
     )

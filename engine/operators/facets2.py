@@ -63,10 +63,6 @@ def _nt():
     return F.lit(None).cast("timestamp")
 
 
-def _nbool():
-    return F.lit(None).cast("boolean")
-
-
 # ---------------------------------------------------------------------------
 # New driver rows for round-2 library operators
 # ---------------------------------------------------------------------------
@@ -755,10 +751,6 @@ from engine.operators import (  # noqa: F401,E402
 )
 
 _NI = "CAST(NULL AS INTEGER)"
-
-
-def _ni():
-    return F.lit(None).cast("int")
 
 
 @query(

@@ -31,6 +31,8 @@ from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
+from engine.io import local_frame
+
 _PID = "_gr_pid"
 _OFF = "_gr_offset"
 
@@ -70,7 +72,7 @@ def with_global_row_number(
     for pid in sorted(counts):
         offsets.append((pid, acc))
         acc += counts[pid]
-    off_df = spark.createDataFrame(offsets or [(0, 0)], f"{_PID} INT, {_OFF} BIGINT")
+    off_df = local_frame(spark, offsets or [(0, 0)], f"{_PID} INT, {_OFF} BIGINT")
     w = W.partitionBy(_PID).orderBy(*cols)
     out = (
         part.join(F.broadcast(off_df), _PID)
@@ -204,8 +206,8 @@ def with_global_value_ranks(
         runs_acc += r["flags"] - spurious
         prev_last_v = r["last"]["v"]
 
-    off_df = spark.createDataFrame(
-        offsets or [(0, 0, 0, 0, 0)],
+    off_df = local_frame(
+        spark, offsets or [(0, 0, 0, 0, 0)],
         f"{_PID} INT, _row_off BIGINT, _run_off BIGINT, _spur INT, _carry BIGINT",
     )
     in_carry = (F.col("_spur") == 1) & (F.col("_l_runs") == 1)

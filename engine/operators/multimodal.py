@@ -250,16 +250,6 @@ def sample_frames(
     return df.select(id_col, blob_col).mapInPandas(batches, schema=FRAME_SCHEMA)
 
 
-def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Evenly-spaced frame sampling from binary payloads (text bytes as
-    the stand-in video): 4 frames × 32 chars, checksummed. The oracle
-    recomputes every frame slice in SQL, pinning the full
-    binary→decode→slice→hash round trip."""
-    docs = load_table(spark, sf_dir, "documents")
-    with_blob = docs.select("doc_id", F.encode("text", "UTF-8").alias("payload"))
-    return sample_frames(with_blob, "doc_id", "payload")
-
-
 def _resize_exprs():
     """(out_width, out_height) fit-to-224 integer planning expressions
     over decoded (fake_width, fake_height) metadata — ONE definition

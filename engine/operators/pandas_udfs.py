@@ -65,29 +65,3 @@ def zscore_purchases_grouped(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return ev.groupBy("user_id").applyInPandas(per_user, schema=schema)
 
-
-def normalize_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """L2-normalize embeddings with a scalar Arrow pandas_udf — the
-    library form returning ``array<double>``.  Library-only: the
-    driver's value hash cannot canonicalize array columns (round-1
-    crash), so the registry ships the exploded scalar shape instead
-    (``embedding_transforms`` in similarity.py)."""
-    emb = load_table(spark, sf_dir, "embeddings")
-
-    @F.pandas_udf(T.ArrayType(T.DoubleType()))
-    def unit(col):
-        import numpy as np
-        import pandas as pd
-
-        def one(v):
-            a = np.asarray(v, dtype="float64")
-            # Sequential-order norm (match the oracle's list_dot_product
-            # exactly; np.dot may vectorize in a different FP order).
-            n = float(sum(float(x) * float(x) for x in a)) ** 0.5
-            return [round(float(x) / n, 6) for x in a]
-
-        return pd.Series([one(v) for v in col])
-
-    return emb.select(
-        "vec_id", unit(F.col("embedding").cast("array<double>")).alias("unit_vec")
-    )

@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from engine.functions.rounding import duck_round_he, round_he
-from engine.io import load_table
+from engine.io import load_table, local_frame
 from engine.registry import query
 
 BASKET_CAP = 64
@@ -165,8 +165,8 @@ def user_path_patterns(spark: SparkSession, sf_dir: str) -> DataFrame:
             ">",
         ).alias("path")
     )
-    pats = spark.createDataFrame(
-        [(p,) for p in PATH_PATTERNS], "pattern string"
+    pats = local_frame(
+        spark, [(p,) for p in PATH_PATTERNS], "pattern string"
     )
     return (
         paths.crossJoin(F.broadcast(pats))

@@ -126,9 +126,10 @@ LIMIT 10
     tags=("relational", "join", "topk", "headline"),
     # Re-exported in round 12 (VERDICT r11 gate: its round-11 demotion
     # in favor of store_lifecycle_suite counted as a dropped driver
-    # query). Both rows stay exported now — nothing in the driver
-    # contract caps the surface at 50, and keeping both avoids ever
-    # dropping a driver-visible query again.
+    # query). The exported surface is frozen at the 50 names in
+    # tests/fixtures/exported_queries.txt
+    # (test_driver_contract.py::test_exported_surface_matches_manifest
+    # pins it), so this query stays exported.
 )
 def q3_top_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q3 adapted. customer is broadcast (dim); orders⋈lineitem is

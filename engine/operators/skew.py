@@ -166,7 +166,7 @@ def salted_agg(
 
 from pyspark.sql import SparkSession  # noqa: E402
 
-from engine.io import load_table  # noqa: E402
+from engine.io import load_table, local_frame  # noqa: E402
 from engine.registry import query  # noqa: E402
 
 EVENT_WEIGHTS = [
@@ -493,8 +493,8 @@ def skew_salted_events(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint")
         ).alias("cents"),
     )
-    dim = ev.sparkSession.createDataFrame(
-        EVENT_WEIGHTS, "event_type string, weight int"
+    dim = local_frame(
+        ev.sparkSession, EVENT_WEIGHTS, "event_type string, weight int"
     )
     joined = salted_join(
         ev, dim, "event_type", n_salts=_SALTS, salt_source="event_id"

@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from engine.functions.rounding import duck_qsum_rounded
-from engine.io import load_table
+from engine.io import load_table, local_frame
 from engine.registry import query
 from engine.streaming.events import (
     read_event_stream,
@@ -474,8 +474,8 @@ def streaming_late_data_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # Counts only grow, so the final value per key is the max update.
     n_stream = (
-        spark.createDataFrame(
-            [(r.day, r.event_type, r.n) for r in updates],
+        local_frame(
+            spark, [(r.day, r.event_type, r.n) for r in updates],
             "day timestamp, event_type string, n bigint",
         )
         .groupBy("day", "event_type")

@@ -50,7 +50,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from engine.functions.hashing import DUCK_H60, SPARK_H60
-from engine.io import load_table
+from engine.io import load_table, local_frame
 from engine.operators.corpus_build import corpus_out_dir
 from engine.registry import query
 
@@ -2491,7 +2491,8 @@ def store_concurrent_writers(spark: SparkSession, sf_dir: str) -> DataFrame:
     man3 = json.load(
         open(os.path.join(store, "_manifests", f"v{v3:05d}.json"))
     )
-    meta_f = spark.createDataFrame(
+    meta_f = local_frame(
+        spark,
         [
             (
                 "meta:versions",
@@ -2824,7 +2825,8 @@ def store_merge_clauses(spark: SparkSession, sf_dir: str) -> DataFrame:
             "h",
         )
     )
-    meta_f = spark.createDataFrame(
+    meta_f = local_frame(
+        spark,
         [
             (
                 "meta:merge",
@@ -2926,7 +2928,8 @@ def store_partial_optimize(spark: SparkSession, sf_dir: str) -> DataFrame:
             "h",
         )
     )
-    meta_f = spark.createDataFrame(
+    meta_f = local_frame(
+        spark,
         [
             (
                 "meta:optimize",
@@ -3354,7 +3357,8 @@ def _store_format_facets(spark: SparkSession, sf_dir: str) -> DataFrame:
             "h",
         )
     )
-    meta_f = spark.createDataFrame(
+    meta_f = local_frame(
+        spark,
         [
             (
                 "meta:merge",
@@ -4066,7 +4070,8 @@ def _store_lifecycle_facets(spark: SparkSession, sf_dir: str) -> DataFrame:
         if head_v != restore_v
         else 0
     )
-    meta_f = spark.createDataFrame(
+    meta_f = local_frame(
+        spark,
         [
             ("meta:dv", dv_zero_rewrite, doomed, 0),
             ("meta:history", int(head_v >= 5), 0, 0),

@@ -50,33 +50,6 @@ def w_top_customers_per_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def w_running_purchase_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user running purchase value + lag + sequence number."""
-    ev = _t(spark, sf_dir, "events").filter(F.col("event_type") == "purchase")
-    w = W.partitionBy("user_id").orderBy("ts", "event_id")
-    return ev.select(
-        "event_id",
-        "user_id",
-        "ts",
-        round_he(F.sum("value").over(w.rowsBetween(W.unboundedPreceding, 0)), 2).alias(
-            "running_value"
-        ),
-        F.lag("event_id").over(w).alias("prev_event_id"),
-        F.row_number().over(w).cast("bigint").alias("seq"),
-    )
-
-
-def w_moving_avg_value(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """7-row sliding mean of purchase value per user."""
-    ev = _t(spark, sf_dir, "events").filter(F.col("event_type") == "purchase")
-    w = W.partitionBy("user_id").orderBy("ts", "event_id").rowsBetween(-6, 0)
-    return ev.select(
-        "event_id",
-        "user_id",
-        round_he(F.avg("value").over(w), 4).alias("mov_avg_7"),
-    )
-
-
 @query(
     "w_sessionize_events",
     oracle="""
@@ -219,24 +192,6 @@ def funnel_view_to_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
         round_he(
             F.sum(lat).cast("double") / F.count("first_purchase"), 2
         ).alias("avg_seconds_to_convert"),
-    )
-
-
-def w_order_value_shifts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Navigation-function surface — lead / first_value / last_value
-    (full frame) / cume_dist — over each customer's order history.
-    Partitioned by o_custkey (high cardinality), one window shuffle
-    serves all four functions."""
-    orders = _t(spark, sf_dir, "orders")
-    w = W.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
-    w_full = w.rowsBetween(W.unboundedPreceding, W.unboundedFollowing)
-    return orders.select(
-        "o_custkey",
-        "o_orderkey",
-        round_he(F.lead("o_totalprice").over(w), 2).alias("next_price"),
-        round_he(F.first("o_totalprice").over(w), 2).alias("first_price"),
-        round_he(F.last("o_totalprice").over(w_full), 2).alias("last_price"),
-        round_he(F.cume_dist().over(w), 6).alias("date_cume_dist"),
     )
 
 

@@ -84,22 +84,24 @@ def n_executed_exchanges(df: DataFrame) -> int:
 #
 # Every ExistingRDD leaf's Arguments line names the RDD's producer call
 # site — "at localCheckpoint at ..." for an eager checkpoint cut, "at
-# applySchemaToPythonRDD at ..." for a createDataFrame local input
-# (bounded driver-side list: globalrank offsets, pattern/weight dims).
+# applySchemaToPythonRDD at ..." for a frame a caller built with
+# ``spark.createDataFrame(<list>)`` (a user's changeset, a test's
+# fixture). The engine's own driver-held rows never leave such a leaf:
+# ``engine.io.local_frame`` plans them as a LocalTableScan.
 # Checkpoint leaves must be covered by a capture tag (the sink below)
-# or they are a plan-audit blind spot; local-input leaves hide nothing
-# worth auditing.
+# or they are a plan-audit blind spot; caller-supplied local inputs
+# hide nothing worth auditing.
 
 _RDD_LEAF_RE = re.compile(r"MapPartitionsRDD\[(\d+)\] at (\w+) at ")
 
 
 def rdd_leaf_classes(plan: str, captured_rdd_ids: set) -> list[str]:
     """Classify every ExistingRDD leaf in a formatted plan string:
-    'local' (bounded createDataFrame input), 'audited' (an eager
-    checkpoint whose pre-checkpoint plan was captured — the leaf's RDD
-    id appears in ``captured_rdd_ids``, see ``audited_checkpoint`` /
-    ``captured_rdd_ids``), or 'blind' (unaudited hidden work — a
-    regression the plan gate must fail).
+    'local' (a caller-supplied createDataFrame input), 'audited' (an
+    eager checkpoint whose pre-checkpoint plan was captured — the
+    leaf's RDD id appears in ``captured_rdd_ids``, see
+    ``audited_checkpoint`` / ``captured_rdd_ids``), or 'blind'
+    (unaudited hidden work — a regression the plan gate must fail).
 
     Checkpoint leaves are matched to capture sites INDIVIDUALLY by RDD
     id (round 7): the earlier count-only pairing let surplus tags

@@ -19,6 +19,8 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
+from engine.io import local_frame
+
 
 def write_parquet(
     df: DataFrame,
@@ -275,7 +277,8 @@ def compact_parquet(
             # quantity we actually want (output files per directory),
             # measured directly instead of estimated via a global
             # bytes/row ratio.
-            widths = spark.createDataFrame(
+            widths = local_frame(
+                spark,
                 [
                     (d, max(1, math.ceil(b / target_file_bytes)))
                     for d, b in sorted(dir_bytes.items())

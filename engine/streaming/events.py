@@ -643,6 +643,7 @@ def write_stream_incremental_dedup(
     document (O(corpus count), no text); the per-batch join shuffles
     digests only.
     """
+    from engine.io import local_frame
     from engine.sinks import overwrite_partitions_dynamic
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
@@ -670,8 +671,10 @@ def write_stream_incremental_dedup(
             # silently mark every doc novel and append contradictory
             # index rows — fail the batch and let the retry see the
             # real index instead.
-            idx = spark.createDataFrame(
-                [], "content_hash string, first_id bigint, batch_id bigint"
+            idx = local_frame(
+                spark,
+                [],
+                "content_hash string, first_id bigint, batch_id bigint",
             )
         corpus = idx.select(
             "content_hash", F.col("first_id").alias("corpus_id")

@@ -100,6 +100,8 @@ from urllib.parse import unquote
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from engine.io import local_frame
+
 _MANIFESTS = "_manifests"
 _DATA = "data"
 
@@ -1444,12 +1446,13 @@ def commit_upsert(
             prev.get("columns"), prev.get("column_map"),
         )
         # the planner already collected the distinct keys (exact
-        # tier): broadcast them as a local relation instead of
+        # tier): broadcast them as a local relation (a JVM
+        # LocalTableScan, see engine.io.local_frame) instead of
         # recomputing the changeset — which may itself be an expensive
         # query — a second time just for its distinct()
         if key_rows is not None:
-            anti_keys = spark.createDataFrame(
-                key_rows, changeset.select(*key_cols).schema
+            anti_keys = local_frame(
+                spark, key_rows, changeset.select(*key_cols).schema
             )
         else:
             anti_keys = changeset.select(*key_cols).distinct()
@@ -1701,7 +1704,8 @@ def _load_entries(
             else ddl
         )
         paths = [os.path.join(store, _DATA, e["file"]) for e in entries]
-        fmap = spark.createDataFrame(
+        fmap = local_frame(
+            spark,
             [
                 (e["file"], *_norm_pval(e["partition"]))
                 for e in entries
@@ -1742,8 +1746,8 @@ def _load_entries(
             F.element_at(F.split(F.input_file_name(), "/"), -1),
         ).join(F.broadcast(fmap), "__vs_file")
         if dv_pairs:
-            dvdf = spark.createDataFrame(
-                dv_pairs, "__vs_file string, __vs_pos bigint"
+            dvdf = local_frame(
+                spark, dv_pairs, "__vs_file string, __vs_pos bigint"
             )
             out = out.join(
                 F.broadcast(dvdf), ["__vs_file", "__vs_pos"], "left_anti"
@@ -2368,7 +2372,7 @@ def read_version(
         if ddl is not None:
             pddl = ", ".join(f"{c} string" for c in pcols)
             full = f"{ddl}, {pddl}" if ddl else pddl
-            return spark.createDataFrame([], full)
+            return local_frame(spark, [], full)
         raise ValueError(
             f"version {version} is an empty snapshot with no recorded"
             " schema (manifest predates schema recording)"
@@ -2795,10 +2799,10 @@ def version_diff(
         mb.get("column_map"),
     )
     if a_df is None and b_df is None:
-        d = spark.createDataFrame([], schema)
+        d = local_frame(spark, [], schema)
     else:
-        empty = spark.createDataFrame(
-            [], f"{pcol} string, doc_id long, n_tokens long, h long"
+        empty = local_frame(
+            spark, [], f"{pcol} string, doc_id long, n_tokens long, h long"
         )
         cols = ["source", "doc_id", "n_tokens", "h"]
         a_df = (a_df if a_df is not None else empty).withColumnRenamed(
@@ -2818,8 +2822,8 @@ def version_diff(
             )
     if not shared_counts:
         return d
-    sc = spark.createDataFrame(
-        sorted(shared_counts.items()), "source string, n_shared bigint"
+    sc = local_frame(
+        spark, sorted(shared_counts.items()), "source string, n_shared bigint"
     )
     zero = F.lit(0).cast("bigint")
     return (
@@ -2941,8 +2945,8 @@ def table_changes(
         pddl = ", ".join(
             f"{c} string" for c in _norm_pcols(pcol)
         )
-        return spark.createDataFrame(
-            [], f"{ddl}, {pddl}, _change_type string"
+        return local_frame(
+            spark, [], f"{ddl}, {pddl}, _change_type string"
         )
     if a_df is None or b_df is None:
         # One-sided window (round 12, guide §2.4 — remove the shuffle
@@ -3241,8 +3245,8 @@ def optimize_auto(
         if max(per_k.values()) <= 1:
             compacted = df.repartition(n_out, *pcols)
         else:
-            kmap = spark.createDataFrame(
-                [(*p, k) for p, k in sorted(per_k.items())],
+            kmap = local_frame(
+                spark, [(*p, k) for p, k in sorted(per_k.items())],
                 ", ".join(f"{c} string" for c in pcols)
                 + ", __vs_k int",
             )
@@ -3488,11 +3492,12 @@ def commit_delete(
             spark, store, to_rewrite, prev["partition_col"],
             prev.get("columns"), prev.get("column_map"),
         )
-        # same local-relation reuse as commit_upsert: the planner's
-        # exact tier already holds the distinct doomed keys
+        # same local-relation reuse (a LocalTableScan) as
+        # commit_upsert: the planner's exact tier already holds the
+        # distinct doomed keys
         if key_rows is not None:
-            anti_keys = spark.createDataFrame(
-                key_rows, keys.select(*key_cols).schema
+            anti_keys = local_frame(
+                spark, key_rows, keys.select(*key_cols).schema
             )
         else:
             anti_keys = keys.select(*key_cols).distinct()

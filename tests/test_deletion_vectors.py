@@ -312,3 +312,56 @@ def test_cli_versions_reports_live_rows(spark, tmp_path, capsys):
     out = capsys.readouterr().out
     assert f"{n} rows" in out  # v1: all physical rows live
     assert f"{n - 3} rows" in out  # v2: dv'd rows excluded
+
+
+def test_store_plans_carry_no_python_rdd_leaf(spark, tmp_path, monkeypatch):
+    """Every frame the store builds from driver-held rows — the
+    file→partition map, the DV positions, the planner's collected keys
+    — is a LocalTableScan (engine.io.local_frame). An
+    applySchemaToPythonRDD leaf would start Python workers in every job
+    that scans it, and a store read or commit pays that per job."""
+    from engine.plans import formatted_plan, rdd_leaf_classes
+
+    store, n = _mk(spark, tmp_path)
+    v2 = vs.commit_delete(
+        spark, store, _keys(spark, [5, 20]), ["part", "k"],
+        merge_on_read=True,
+    )
+    plans = {
+        "read_latest": vs.read_version(spark, store),
+        "read_point": vs.read_version(
+            spark, store, point_filters={"k": 7}
+        ),
+        "table_changes": vs.table_changes(
+            spark, store, 1, v2, ["part", "k"]
+        ),
+    }
+    plans = {name: formatted_plan(df) for name, df in plans.items()}
+
+    # the survivors of an upsert, as staged: a changeset built without
+    # a Python RDD of its own, so any such leaf is the store's
+    staged = []
+    stage = vs._stage_files
+
+    def spy(df, *a, **kw):
+        staged.append(formatted_plan(df))
+        return stage(df, *a, **kw)
+
+    monkeypatch.setattr(vs, "_stage_files", spy)
+    chg = spark.range(3).selectExpr(
+        "'p' AS part", "id * 8 AS k", "concat('u:', id) AS v"
+    )
+    vs.commit_upsert(spark, store, chg, ["part", "k"])
+    (plans["commit_upsert"],) = staged
+
+    leaves = {
+        name: rdd_leaf_classes(plan, set())
+        for name, plan in plans.items()
+    }
+    assert all(not c for c in leaves.values()), leaves
+    assert "applySchemaToPythonRDD" not in "".join(plans.values())
+    # the upsert did rewrite files: its survivors anti-join the
+    # planner's keys, broadcast from a local relation
+    assert "LocalTableScan" in plans["commit_upsert"]
+    got = sorted(r.k for r in vs.read_version(spark, store).collect())
+    assert got == sorted(set(range(n)) - {5, 20})

@@ -103,16 +103,18 @@ def row(name: str, fn) -> str:
     if leaf_classes:
         # RDD-scan leaves hide whatever produced the RDD from this
         # row's counts; say exactly what hides there. 'local' leaves
-        # are bounded createDataFrame inputs (offsets/dims — nothing
-        # to audit); 'audited' leaves are eager checkpoints whose
-        # pre-checkpoint plan was captured this run (subplan table
-        # below, budget-gated in test_plans.py); a 'blind' leaf is an
-        # unaudited hidden subplan and should not exist.
+        # are caller-supplied createDataFrame inputs (the engine's own
+        # offsets/dims are LocalTableScans via engine.io.local_frame,
+        # so a query plan should carry none); 'audited' leaves are
+        # eager checkpoints whose pre-checkpoint plan was captured
+        # this run (subplan table below, budget-gated in
+        # test_plans.py); a 'blind' leaf is an unaudited hidden
+        # subplan and should not exist.
         parts = []
         if "local" in leaf_classes:
             parts.append(
-                f"{leaf_classes.count('local')} bounded local-input RDD"
-                " leaves (createDataFrame offsets/dims)"
+                f"{leaf_classes.count('local')} caller-supplied"
+                " local-input RDD leaves (createDataFrame lists)"
             )
         if "audited" in leaf_classes:
             parts.append(
