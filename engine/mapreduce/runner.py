@@ -1,4 +1,4 @@
-"""Hadoop-Streaming-compatible MapReduce job runner on Spark RDDs.
+"""Hadoop-Streaming-compatible MapReduce job runner on Spark.
 
 Reference semantics reproduced (citations into /root/reference):
 
@@ -14,15 +14,35 @@ Reference semantics reproduced (citations into /root/reference):
   before the first tab (``worker/__main__.py:143-148``).
 - Sort: each reducer's input is sorted lexicographically by WHOLE LINE
   (byte order; ``worker/__main__.py:166-167`` uses coreutils sort, and
-  ``heapq.merge`` preserves it, ``worker/__main__.py:196-209``). Python
-  str comparison over UTF-8 text equals byte order, matching the
-  C-locale sort the goldens assume (SURVEY.md §8).
+  ``heapq.merge`` preserves it, ``worker/__main__.py:196-209``). Spark
+  compares strings as UTF-8 bytes, which equals Python str order and
+  the C-locale sort the goldens assume (SURVEY.md §8).
 - Reduce: the merged sorted stream is piped through the reducer
   executable; contiguous equal keys are the grouping contract
   (``tests/testdata/exec/wc_reduce.py:25-28``).
 - Output: ``part-00000 .. part-0000(R-1)`` text files in the output
-  directory, which is deleted and recreated first
+  directory, one per reducer even when its bucket is empty; the
+  directory is deleted and recreated first
   (``worker/__main__.py:195,213-216``; ``manager/__main__.py:183-187``).
+
+Where it runs. The records live in the JVM from input to output, as in
+Hadoop Streaming: the text input, the pipes into and out of executable
+steps (Spark's ``PipedRDD``, which fails the task on a non-zero exit
+and gives the process the executor's environment), the shuffle and the
+part-file sink. The shuffle is one Spark SQL exchange: the md5 bucket
+is computed in SQL and used as the partition id as given
+(``repartitionById``), then each bucket is sorted by whole line
+(``sortWithinPartitions``). Only a Python-callable step runs in a
+Python worker: it reads its records as UTF-8 strings and hands its
+output back as raw UTF-8 bytes, with no pickling either way. A job
+whose steps are both executables starts no Python worker.
+
+Records. An executable's output is split into records the way the
+input reader splits files (Hadoop's ``LineReader``): ``\\n``,
+``\\r\\n`` and a bare ``\\r`` each end a record, and a missing final
+newline still ends the last one. An executable may exit without
+reading all of its stdin; the rest of its input is dropped and the
+task succeeds if the exit status is 0.
 
 Scale notes: this is one Spark stage pair (map → shuffle → reduce);
 the shuffle is Spark's sort-based shuffle, which spills — the
@@ -38,15 +58,21 @@ import shutil
 from collections.abc import Callable, Iterator
 from tempfile import mkdtemp
 
-from pyspark.sql import SparkSession
+from pyspark import RDD
+from pyspark.serializers import UTF8Deserializer
+from pyspark.sql import DataFrame, SparkSession
+
+from engine.session import static_planning
 
 LineTransform = Callable[[Iterator[str]], Iterator[str]]
+Step = str | list[str] | LineTransform
 
 
-def _exec_command(executable: str | list[str]) -> str:
-    """Build the pipe command for an executable, honoring shebangs even
-    when the file lacks the executable bit (the reference always execs
-    directly; we are more forgiving)."""
+def _exec_command(executable: str | list[str]) -> list[str]:
+    """The argv for an executable, honoring shebangs even when the file
+    lacks the executable bit (the reference always execs directly; we
+    are more forgiving). Each element reaches the process as one
+    argument: no shell and no re-tokenizing sits in between."""
     if isinstance(executable, list):
         parts = list(executable)
     else:
@@ -65,12 +91,7 @@ def _exec_command(executable: str | list[str]) -> str:
             parts = interp + parts
         else:
             parts = ["sh"] + parts
-    # RDD.pipe tokenizes the command string; quote each part so
-    # executable paths or argv entries containing spaces/quotes don't
-    # silently split into wrong tokens (round-1 advice).
-    import shlex
-
-    return " ".join(shlex.quote(str(p)) for p in parts)
+    return [str(p) for p in parts]
 
 
 def list_input_files(input_dir: str) -> list[str]:
@@ -83,12 +104,66 @@ def list_input_files(input_dir: str) -> list[str]:
     ]
 
 
+def _run_step(spark: SparkSession, records, step: Step):
+    """One map or reduce step over a JVM ``JavaRDD[String]`` of records;
+    returns the step's output records, again a ``JavaRDD[String]``."""
+    sc = spark.sparkContext
+    if not callable(step):
+        return records.pipe(_exec_command(step), {}, False, 8192, "UTF-8")
+
+    # Defined as a local closure (not a module reference) so cloudpickle
+    # ships it by value — executors need no 'engine' on PYTHONPATH.
+    def encoded(lines):
+        for line in step(lines):
+            yield line.encode("utf-8")
+
+    # PySpark's own saveAsTextFile trick: the worker writes raw bytes
+    # and the JVM decodes them, so no record is pickled.
+    out = RDD(records, sc, UTF8Deserializer()).mapPartitions(encoded)
+    out._bypass_serializer = True
+    return out._jrdd.map(sc._jvm.BytesToString())
+
+
+def _md5_bucket_sql(n: int) -> str:
+    """``int(md5(key).hexdigest(), 16) % n`` in SQL over the record
+    column ``value``, key = text before the first tab (``char(9)``).
+    The 128-bit digest is read as four 32-bit hex chunks folded by
+    Horner's rule mod ``n``, which stays inside bigint for every int
+    ``n``; the repeated digest is computed once per row (subexpression
+    elimination)."""
+    digest = "md5(substring_index(value, char(9), 1))"
+    bucket = "0"
+    for i in range(4):
+        chunk = f"cast(conv(substring({digest}, {8 * i + 1}, 8), 16, 10) as bigint)"
+        bucket = f"({bucket} * 4294967296 + {chunk}) % {n}"
+    return f"cast({bucket} as int)"
+
+
+def _shuffle(spark: SparkSession, records, n: int):
+    """Bucket by md5 of key and sort each bucket by whole line, as one
+    SQL exchange; returns the ``n`` reducer inputs as a ``JavaRDD[String]``."""
+    strings = spark._jvm.org.apache.spark.sql.Encoders.STRING()
+    ds = spark._jsparkSession.createDataset(records.rdd(), strings)
+    shuffled = (
+        DataFrame(ds.toDF(), spark)
+        .selectExpr("value", f"{_md5_bucket_sql(n)} AS bucket")
+        .repartitionById(n, "bucket")
+        .sortWithinPartitions("value")
+        .select("value")
+    )
+    # Planned without AQE: it has nothing to adapt in one id-partitioned
+    # exchange, and it would run the map stage eagerly here and turn an
+    # empty map output into an RDD of no partitions (no part files).
+    with static_planning(spark):
+        return getattr(shuffled._jdf, "as")(strings).javaRDD()
+
+
 def run_job(
     spark: SparkSession,
     input_directory: str,
     output_directory: str,
-    mapper: str | list[str] | LineTransform,
-    reducer: str | list[str] | LineTransform,
+    mapper: Step,
+    reducer: Step,
     num_mappers: int = 2,
     num_reducers: int = 2,
 ) -> list[str]:
@@ -98,11 +173,10 @@ def run_job(
     [path, arg, ...] — Hadoop Streaming mode, reference-exact) or
     Python callables ``Iterator[str] -> Iterator[str]`` (native mode).
     """
-    sc = spark.sparkContext
     files = list_input_files(input_directory)
     if not files:
         raise FileNotFoundError(f"no input files in {input_directory}")
-    # sc.textFile takes a comma-separated path list, so a comma INSIDE a
+    # textFile takes a comma-separated path list, so a comma INSIDE a
     # filename would silently split into two bogus paths (round-1
     # advice). Reject loudly; such names also break Hadoop's own API.
     # Hadoop also interprets the path string as a GLOB, so [, ], {, },
@@ -115,44 +189,13 @@ def run_job(
             f" metacharacters ([]{{}}*?): {bad}"
         )
 
-    # Map stage. minPartitions=num_mappers for task-shape parity with
-    # the reference's round-robin split (manager/__main__.py:195-202);
+    # minPartitions=num_mappers for task-shape parity with the
+    # reference's round-robin split (manager/__main__.py:195-202);
     # per-file grouping is not load-bearing for stateless mappers.
-    lines = sc.textFile(",".join(files), minPartitions=max(1, num_mappers))
-    if callable(mapper):
-        mapped = lines.mapPartitions(mapper)
-    else:
-        # checkCode: a mapper that exits non-zero must FAIL the job
-        # (reference Hadoop-Streaming semantics), not publish the
-        # partial lines it emitted before crashing.
-        mapped = lines.pipe(_exec_command(mapper), checkCode=True)
-
-    # Shuffle: md5-bucket by key, whole-line sort within partition.
-    # Defined as local closures (not module references) so cloudpickle
-    # ships them by value — executors need no 'engine' on PYTHONPATH.
-    n_red = max(1, num_reducers)
-
-    def md5_bucket_of_line(line: str) -> int:
-        import hashlib as _hashlib
-
-        key = line.split("\t", 1)[0]
-        return int(_hashlib.md5(key.encode("utf-8")).hexdigest(), 16) % n_red
-
-    shuffled = (
-        mapped.map(lambda line: (line, None))
-        .repartitionAndSortWithinPartitions(
-            numPartitions=n_red,
-            partitionFunc=md5_bucket_of_line,
-            keyfunc=lambda line: line,
-        )
-        .map(lambda kv: kv[0])
-    )
-
-    # Reduce stage: one reducer process (or callable) per partition.
-    if callable(reducer):
-        reduced = shuffled.mapPartitions(reducer)
-    else:
-        reduced = shuffled.pipe(_exec_command(reducer), checkCode=True)
+    lines = spark.sparkContext._jsc.textFile(",".join(files), max(1, num_mappers))
+    mapped = _run_step(spark, lines, mapper)
+    shuffled = _shuffle(spark, mapped, max(1, num_reducers))
+    reduced = _run_step(spark, shuffled, reducer)
 
     # Sink: delete + recreate the output dir (manager/__main__.py:183-187),
     # then publish Spark's part-NNNNN files (worker/__main__.py:195).

@@ -206,16 +206,15 @@ def test_chained_two_round_jobs(spark, tmp_path):
 
 
 def test_exec_command_quotes_spaces(tmp_path):
-    """Executable paths containing spaces must survive RDD.pipe's
-    shlex.split tokenization (round-1 advice)."""
-    import shlex
-
+    """Executable paths and argv entries containing spaces must each
+    reach the process as ONE argument (round-1 advice): the command is
+    an argv list, never a string that gets re-tokenized."""
     from engine.mapreduce.runner import _exec_command
 
     script = tmp_path / "my mapper.sh"
     script.write_text("#!/bin/sh\ncat\n")
-    cmd = _exec_command([str(script), "arg with space"])
-    assert shlex.split(cmd)[-2:] == [str(script), "arg with space"]
+    argv = _exec_command([str(script), "arg with space"])
+    assert argv == ["/bin/sh", str(script), "arg with space"]
 
 
 def test_run_job_rejects_comma_paths(spark, tmp_path):
@@ -344,3 +343,124 @@ def test_wordcount_large_corpus_golden(spark, tmp_path):
                 want[tok] = want.get(tok, 0) + 1
     assert got == want
     assert sum(want.values()) > 50_000  # the corpus is actually large
+
+
+def _md5_model(lines: list[str], n: int) -> list[list[str]]:
+    """The reference's placement (worker/__main__.py:143-148,166-167):
+    bucket int(md5(key), 16) % n, key = text before the first tab, each
+    bucket sorted by whole line."""
+    import hashlib
+
+    parts: list[list[str]] = [[] for _ in range(n)]
+    for line in lines:
+        key = line.split("\t", 1)[0].encode("utf-8")
+        parts[int(hashlib.md5(key).hexdigest(), 16) % n].append(line)
+    return [sorted(p) for p in parts]
+
+
+def _read_records(paths: list[str]) -> list[list[str]]:
+    return [open(p, encoding="utf-8", newline="").read().split("\n")[:-1] for p in paths]
+
+
+def _last_job_id(spark) -> int:
+    return max(spark.sparkContext.statusTracker().getJobIdsForGroup(), default=-1)
+
+
+def _stage_rdd_names(spark, after_job: int) -> dict[int, list[str]]:
+    """RDD names per stage of every job after ``after_job``, read from
+    the status store (UI off)."""
+    tracker = spark.sparkContext.statusTracker()
+    store = spark.sparkContext._jsc.sc().statusStore()
+    stages = sorted(
+        {
+            s
+            for j in tracker.getJobIdsForGroup()
+            if j > after_job
+            for s in tracker.getJobInfo(j).stageIds
+        }
+    )
+
+    def names(cluster) -> list[str]:
+        out = [n.name() for n in _iter(cluster.childNodes())]
+        for child in _iter(cluster.childClusters()):
+            out += names(child)
+        return out
+
+    return {s: names(store.operationGraphForStage(s).rootCluster()) for s in stages}
+
+
+def _iter(jseq):
+    it = jseq.iterator()
+    while it.hasNext():
+        yield it.next()
+
+
+def test_executable_job_runs_no_python_worker_stage(spark, tmp_path):
+    """An executable-only job stays in the JVM end to end: no stage of
+    it holds a PythonRDD (the JVM pipes the executables, and bucket and
+    sort are one SQL exchange). Its part files still equal the
+    reference's md5 placement — non-BMP keys, empty keys, several tabs,
+    more buckets than keys. A callable job, by contrast, does show a
+    PythonRDD stage, so the probe can see one."""
+    lines = [
+        "b\tx\ty\tz", "\tempty key", "", "\t", "a\t1", "a\t0", "\U0001f600\tpoo",
+        "\u00e9t\u00e9", "zz\t\t", "a",
+    ]
+    inp = tmp_path / "in"
+    inp.mkdir()
+    (inp / "f0").write_text("\n".join(lines[:4]) + "\n", encoding="utf-8")
+    (inp / "f1").write_text("\n".join(lines[4:]) + "\n", encoding="utf-8")
+
+    for n in (3, 8):
+        before = _last_job_id(spark)
+        parts = run_job(
+            spark, str(inp), str(tmp_path / "out"), "/bin/cat", ["/bin/cat", "-"],
+            num_mappers=2, num_reducers=n,
+        )
+        assert [os.path.basename(p) for p in parts] == [f"part-{i:05d}" for i in range(n)]
+        assert _read_records(parts) == _md5_model(lines, n)
+        stages = _stage_rdd_names(spark, before)
+        assert len(stages) >= 2, stages  # map and reduce
+        python = {s: names for s, names in stages.items() if "PythonRDD" in names}
+        assert python == {}, python
+
+    before = _last_job_id(spark)
+    parts = run_job(
+        spark, str(inp), str(tmp_path / "out"), lambda it: it, "/bin/cat",
+        num_mappers=2, num_reducers=3,
+    )
+    assert _read_records(parts) == _md5_model(lines, 3)
+    assert any("PythonRDD" in names for names in _stage_rdd_names(spark, before).values())
+
+
+def test_executable_output_records_split_like_input_lines(spark, tmp_path):
+    """Executable output is split into records the way text input is
+    (Hadoop's LineReader): \\n, \\r\\n and a bare \\r each end a
+    record, and a missing final newline still ends the last one."""
+    inp = tmp_path / "in"
+    inp.mkdir()
+    (inp / "f0").write_text("ignored\n")
+    emit = tmp_path / "emit.sh"
+    emit.write_text("#!/bin/sh\ncat >/dev/null\nprintf 'k1\\ta\\r\\nk2\\tb\\rk3\\tc\\nk4\\td'\n")
+    emit.chmod(0o755)
+    parts = run_job(
+        spark, str(inp), str(tmp_path / "out"), str(emit), "/bin/cat",
+        num_mappers=1, num_reducers=1,
+    )
+    assert open(parts[0], encoding="utf-8", newline="").read() == (
+        "k1\ta\nk2\tb\nk3\tc\nk4\td\n"
+    )
+
+
+def test_executable_may_exit_without_reading_stdin(spark, tmp_path):
+    """A mapper that stops reading early (``head -n 1``) and exits 0
+    succeeds; the input it never read is dropped. The file is larger
+    than a pipe buffer, so the writer does hit the closed pipe."""
+    inp = tmp_path / "in"
+    inp.mkdir()
+    (inp / "f0").write_text("".join(f"line {i:06d}\n" for i in range(40000)))
+    parts = run_job(
+        spark, str(inp), str(tmp_path / "out"), ["head", "-n", "1"], "/bin/cat",
+        num_mappers=1, num_reducers=2,
+    )
+    assert sorted(r for part in _read_records(parts) for r in part) == ["line 000000"]

@@ -6,7 +6,8 @@ shrinking still gives minimal counterexamples on failure."""
 
 import datetime as dt
 
-from hypothesis import HealthCheck, given, settings
+import pytest
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -165,6 +166,50 @@ def test_run_job_native_wordcount_equals_counter(
         w for lines in file_lines for line in lines for w in line.split()
     )
     assert got == want
+
+
+# Record text for the identity job: tabs (empty keys, several tabs per
+# line), spaces, BMP and non-BMP characters; no record separators.
+_mr_line = st.text(alphabet="ab\t \u00e9\u4e2d\U0001f600", max_size=8)
+
+
+@pytest.mark.parametrize("mode", ["executable", "callable"])
+@given(
+    file_lines=st.lists(st.lists(_mr_line, max_size=6), min_size=1, max_size=3),
+    n_reducers=st.sampled_from([1, 2, 3, 8]),
+)
+@example(file_lines=[["", "\t", "\t\ta\t", "\U0001f600\tx", "a b"]], n_reducers=8)
+@_prop_settings
+def test_run_job_identity_places_lines_by_md5_bucket(
+    spark, tmp_path_factory, mode, file_lines, n_reducers
+):
+    """Layer-A runner placement: through the identity job (``/bin/cat``
+    executables, or identity callables) every line lands in bucket
+    ``int(md5(key).hexdigest(), 16) % R`` (key = text before the first
+    tab) and each bucket is sorted by whole line, with exactly R part
+    files even when there are more buckets than keys."""
+    from engine.mapreduce.runner import run_job
+    from tests.test_mapreduce import _md5_model
+
+    base = tmp_path_factory.mktemp("mr_place")
+    indir = base / "in"
+    indir.mkdir()
+    for i, lines in enumerate(file_lines):
+        (indir / f"file{i:02d}").write_text(
+            "".join(line + "\n" for line in lines), encoding="utf-8"
+        )
+    step = "/bin/cat" if mode == "executable" else (lambda lines: lines)
+    parts = run_job(
+        spark, str(indir), str(base / "out"), mapper=step, reducer=step,
+        num_mappers=2, num_reducers=n_reducers,
+    )
+
+    want = _md5_model([line for lines in file_lines for line in lines], n_reducers)
+    assert [p.rsplit("/", 1)[1] for p in parts] == [
+        f"part-{i:05d}" for i in range(n_reducers)
+    ]
+    got = [open(p, encoding="utf-8", newline="").read() for p in parts]
+    assert got == ["".join(line + "\n" for line in bucket) for bucket in want]
 
 
 @given(
